@@ -1,0 +1,9 @@
+package org.apache.spark
+
+/** Access to the listener bus's flush, which Spark keeps package-private:
+  * the benchmark reads its listener counters only after every event posted
+  * so far has been delivered.
+  */
+object PerfbenchBus {
+  def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}
