@@ -31,14 +31,16 @@ final case class ApplyResult(
   * VGTID cursors committed in the same snapshot (exactly-once).
   *
   * Scale notes:
-  *  - LWW dedup is a single shuffle on the merge key; partial aggregation
-  *    (`max_by`-style) happens map-side because we use a window over the
-  *    already key-partitioned exchange. Hot repos are handled by AQE skew
-  *    splitting on the join and by the key carrying `path` (high cardinality
-  *    within a hot repo spreads its partitions).
+  *  - LWW dedup is one `LwwMaxBy` aggregate on the merge key: a map-side
+  *    partial aggregate, one shuffle on the key, a final aggregate. Hot
+  *    repos are absorbed by the map-side combine and by the key carrying
+  *    `path` (high cardinality within a hot repo spreads its partitions).
+  *  - The winners are shuffled a second time by `_bucket` for the staged
+  *    write, so files per commit stay O(buckets).
   *  - The MERGE never rewrites the whole table: only buckets present in the
-  *    batch are read back, anti-joined, and rewritten. The batch side of the
-  *    join is broadcast when small (AQE decides from runtime stats).
+  *    batch are read back, anti-joined with the staged keys, and rewritten.
+  *    The staged-key side of the join is broadcast when small (AQE decides
+  *    from runtime stats).
   */
 object CdcApply {
 
@@ -157,14 +159,13 @@ object CdcApply {
     * north-star's "(vgtid, event_seq) window".
     * Input must carry `vgtid`, `event_seq`, `op`, `before`, `after`.
     *
-    * Implementation: winner keys via `max(struct(rank, seq))` — a hash
-    * aggregate with MAP-SIDE partial combine, so the shuffle carries one
-    * small row per key per partition instead of every event's content bytes
-    * — then a join back to pick the winning rows. AQE broadcasts the winner
-    * side when it is small (typical micro-batch); at worst it degrades to a
-    * shuffle join on the key, never worse than the window formulation. Hot
-    * repos (Zipf skew) are absorbed by the map-side combine, the classic
-    * skew cure the window version lacks.
+    * Implementation: ONE aggregate, `LwwMaxBy(payload, rank, seq)` grouped
+    * by the key, with a map-side partial combine — the shuffle carries one
+    * winning payload per key per map partition, never every event, and no
+    * join back is needed because the payload rides in the aggregate
+    * buffer. Hot repos (Zipf skew) are absorbed by the map-side combine,
+    * the classic skew cure the window version lacks. See [[graft.functions
+    * .LwwMaxBy]] for when the aggregate falls back to sorting.
     */
   def dedupLww(events: DataFrame,
       keys: Seq[String] = Seq("repo", "path"),
@@ -463,7 +464,6 @@ object CdcApply {
       case None if conf.twoPassDedup => dedupLwwTwoPassManaged(filtered, keys, keyLanding)
       case None                      => (dedupLww(filtered, keys, keyLanding), () => ())
     }
-    val spark = events.sparkSession
 
     // --- stage (ONE job: gen/source → LWW combine → bucket shuffle → parquet).
     // Staged upsert files ARE the final data files (adopted by rename, no
@@ -532,7 +532,7 @@ object CdcApply {
       var maxWireSv = 1
       var upsertCount = 0L
       var deleteCount = 0L
-      val stagedRows = table.stagedAllDf(spark, stage, Some(staged.schema)) match {
+      val stagedRows = table.stagedAllDf(stage, Some(staged.schema)) match {
         case None => Array.empty[org.apache.spark.sql.Row]
         case Some(all) => statsFromStaged(all).collect()
       }
@@ -562,7 +562,7 @@ object CdcApply {
         else {
           val old = table.readFiles(snap, oldFiles)
           val survivors = old
-            .join(table.stagedKeys(spark, stage, keyNames), keyNames, "left_anti")
+            .join(table.stagedKeys(stage, keyNames), keyNames, "left_anti")
             .withColumn("_bucket",
               pmod(xxhash64(col(keyNames.head)), lit(snap.numBuckets)).cast("int"))
           // hash-repartition on _bucket alone: file count per commit is

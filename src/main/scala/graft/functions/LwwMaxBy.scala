@@ -18,9 +18,15 @@ final class LwwBuffer(
   * aggregate SURVEY.md §2 Part B reserved "if max_by(struct) proves hot":
   * the built-in `max_by` over a struct ordering key plans as SortAggregate
   * (struct buffers are hash-agg-ineligible), which sorts every map partition
-  * of the batch. This object-buffer form is ObjectHashAggregate-eligible —
-  * one hash probe per event, no sort — with the same map-side partial
-  * combine (the shuffle still carries one candidate per key per partition).
+  * of the batch. This object-buffer form is ObjectHashAggregate-eligible,
+  * with the same map-side partial combine (the shuffle still carries one
+  * candidate per key per partition). It is one hash probe per event only
+  * while a task holds at most
+  * `spark.sql.objectHashAggregate.sortBased.fallbackThreshold` (default
+  * 128) distinct keys: past that, the task sorts its remaining input and
+  * aggregates sort-based. At catch-up shapes (1.1 M events, ~600 k keys
+  * over 8 tasks) every task falls back; raising the threshold to 262 k
+  * keeps one buffer object per key in memory and measured ~55 % slower.
   *
   * Semantics: keeps the payload of the row with the lexicographically
   * greatest (rank, seq); both orderings are LONGs (vgtid rank, event_seq).

@@ -306,10 +306,9 @@ final class LakeTable(val root: String, spark: SparkSession) {
   }
 
   /** The staged files of one `_kind` partition, if any were written. */
-  private[graft] def stagedKindDf(spark2: SparkSession, stage: Path,
-      kind: String): Option[DataFrame] = {
+  private def stagedKindDf(stage: Path, kind: String): Option[DataFrame] = {
     val p = new Path(stage, s"_kind=$kind")
-    if (!fs.exists(p)) None else Some(spark2.read.parquet(p.toString))
+    if (!fs.exists(p)) None else Some(spark.read.parquet(p.toString))
   }
 
   /** BOTH staged kinds in one read, `_kind`/`_bucket` recovered as partition
@@ -320,7 +319,7 @@ final class LakeTable(val root: String, spark: SparkSession) {
     * just written, WITH `_kind`/`_bucket`) skips the per-batch footer read +
     * schema inference — the writer knows exactly what it wrote.
     */
-  private[graft] def stagedAllDf(spark2: SparkSession, stage: Path,
+  private[graft] def stagedAllDf(stage: Path,
       stagedSchema: Option[StructType] = None): Option[DataFrame] = {
     val f = fs
     val hasAny = Seq("u", "d").exists(k => f.exists(new Path(stage, s"_kind=$k")))
@@ -334,24 +333,19 @@ final class LakeTable(val root: String, spark: SparkSession) {
           val reordered = StructType(
             s.fields.filterNot(f2 => parts.contains(f2.name)) ++
               s.fields.filter(f2 => parts.contains(f2.name)))
-          spark2.read.schema(reordered)
-        case None => spark2.read
+          spark.read.schema(reordered)
+        case None => spark.read
       }
       Some(reader.parquet(stage.toString))
     }
   }
 
-  /** Parquet-footer row count of one staged kind (no data scan). */
-  private[graft] def stagedCount(spark2: SparkSession, stage: Path, kind: String): Long =
-    stagedKindDf(spark2, stage, kind).map(_.count()).getOrElse(0L)
-
   /** Merge keys present in the staged batch (both `u` and `d` kinds; the
     * per-shard stats provenance rides as `_s_*` columns ON the winner rows,
     * pruned away here) — column-pruned read.
     */
-  private[graft] def stagedKeys(spark2: SparkSession, stage: Path,
-      keyCols: Seq[String]): DataFrame =
-    Seq("u", "d").flatMap(stagedKindDf(spark2, stage, _))
+  private[graft] def stagedKeys(stage: Path, keyCols: Seq[String]): DataFrame =
+    Seq("u", "d").flatMap(stagedKindDf(stage, _))
       .map(_.select(keyCols.map(col): _*))
       .reduce(_.unionByName(_))
 

@@ -186,6 +186,13 @@ object CdcStream {
       .named("spark_schema")
   }
 
+  /** Hidden-name prefix of a metrics file still being written: Spark's
+    * file listing skips `.`-prefixed names, so a crash mid-write never puts
+    * a footerless file in front of [[readMetrics]]/[[backfillMetrics]];
+    * [[compactMetrics]] sweeps the stranded ones.
+    */
+  private val metricsTmpPrefix = ".part-direct-"
+
   /** Append one row per (batch, shard) to the table's metrics sidecar —
     * per-partition lineage (shard, vgtid range, rows) + throughput, the
     * north-star's per-micro-batch metrics table.
@@ -193,32 +200,36 @@ object CdcStream {
     * Written DIRECTLY with the parquet writer on the driver: the rows are
     * O(shards) per batch, and the previous `coalesce(1).write` formulation
     * paid a full Spark job (driver→scheduler→task→commit protocol) per
-    * micro-batch just to emit a few hundred bytes. Same directory layout,
+    * micro-batch just to emit a few hundred bytes. The file is written under
+    * a hidden temp name and renamed to `part-direct-*` once closed, so a
+    * visible `part-*` file always has its footer. Same directory layout,
     * same `part-*` naming contract ([[compactMetrics]]/[[backfillMetrics]]
     * key on the prefix), byte-compatible schema.
     */
-  private def writeMetrics(spark: SparkSession, tableRoot: String, batchId: Long,
+  private[graft] def writeMetrics(spark: SparkSession, tableRoot: String, batchId: Long,
       stats: Map[String, ShardStats], wallMs: Long, version: Long): Unit = {
     if (stats.isEmpty) return
     val totalRows = stats.values.map(_.rows).sum
     val evPerSec = if (wallMs > 0) totalRows * 1000.0 / wallMs else 0.0
     val dir = new org.apache.hadoop.fs.Path(s"$tableRoot/metrics")
     val conf = spark.sparkContext.hadoopConfiguration
-    val file = new org.apache.hadoop.fs.Path(dir,
-      s"part-direct-${java.util.UUID.randomUUID()}.parquet")
+    val id = java.util.UUID.randomUUID()
+    val tmp = new org.apache.hadoop.fs.Path(dir, s"$metricsTmpPrefix$id.parquet.tmp")
     val writer = org.apache.parquet.hadoop.example.ExampleParquetWriter
-      .builder(org.apache.parquet.hadoop.util.HadoopOutputFile.fromPath(file, conf))
+      .builder(org.apache.parquet.hadoop.util.HadoopOutputFile.fromPath(tmp, conf))
       .withType(metricsSchema)
       .withCompressionCodec(org.apache.parquet.hadoop.metadata.CompressionCodecName.SNAPPY)
       .build()
     try {
       stats.toSeq.sortBy(_._1).foreach { case (shard, st) =>
         val g = new org.apache.parquet.example.data.simple.SimpleGroup(metricsSchema)
+        // optional strings: an absent value is a null column, not an add
+        def addStr(field: String, v: String): Unit = if (v != null) g.add(field, v)
         g.add("batch_id", batchId)
-        g.add("keyspace", st.cursor.keyspace)
-        g.add("shard", shard)
-        g.add("vgtid_start", st.vgtidStart)
-        g.add("vgtid_end", st.vgtidEnd)
+        addStr("keyspace", st.cursor.keyspace)
+        addStr("shard", shard)
+        addStr("vgtid_start", st.vgtidStart)
+        addStr("vgtid_end", st.vgtidEnd)
         g.add("rows", st.rows)
         g.add("wall_ms", wallMs)
         g.add("batch_events_per_sec", evPerSec)
@@ -226,6 +237,9 @@ object CdcStream {
         writer.write(g)
       }
     } finally writer.close()
+    val fs = dir.getFileSystem(conf)
+    if (!fs.rename(tmp, new org.apache.hadoop.fs.Path(dir, s"part-direct-$id.parquet")))
+      throw new IllegalStateException(s"metrics promote failed: $tmp")
   }
 
   /** Reconstruct a skipped-replay batch's metrics rows from the committed
@@ -326,8 +340,10 @@ object CdcStream {
       }
     }
     if (!fs.exists(dir)) return false
-    // tmp leftovers from a crashed fold: inputs were never deleted, safe sweep
-    fs.globStatus(new Path(s"$tableRoot/.metrics-tmp-*"))
+    // tmp leftovers from a crashed fold (inputs were never deleted) or a
+    // crashed direct write (its rows are healed from lineage): safe sweep
+    (fs.globStatus(new Path(s"$tableRoot/.metrics-tmp-*")) ++
+      fs.globStatus(new Path(dir, s"$metricsTmpPrefix*")))
       .foreach(s => fs.delete(s.getPath, true))
     def foldTier(inPrefix: String, outPrefix: String): Boolean = {
       val files = fs.listStatus(dir).toSeq.map(_.getPath)
@@ -560,10 +576,17 @@ object CdcStream {
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val t0 = System.nanoTime()
+        // apply on the caller's long-lived session, not the query's clone:
+        // each query runs in a fresh cloneSession(), whose new artifact
+        // state gives every task a new classloader, and the codegen cache
+        // is keyed by classloader — so each sync would recompile all of
+        // its generated classes. The batch is a LogicalRDD, so the rebind
+        // is free; jobs still run on this thread (job group, pool).
+        val events = org.apache.spark.sql.GraftBridge.rebind(spark, batch)
         // single source scan: cursors + lineage stats come back from the
         // apply itself (recovered from the staged winners' provenance
         // columns), not a pre-scan of the batch here
-        val res = CdcApply.applyBatch(table, batch, batchId, streamId = rc.streamId,
+        val res = CdcApply.applyBatch(table, events, batchId, streamId = rc.streamId,
           conf = CdcApply.ApplyConfig(parityMode = rc.parityMode,
             wireSpec = rc.wireTable.map(_.spec).orElse(
               if (rc.wirePayload) Some(graft.core.WireTableSpec.repoProfile) else None),

@@ -360,12 +360,23 @@ case class ChangelogInputPartition(shardIdx: Int, from: Long, to: Long, c: GenCo
   * only the `VitessClient` interface); this factory owns just the
   * row ENCODING (typed / wire / generic-wire envelope) and test fault
   * injection.
+  *
+  * The case-class encoders are derived HERE, on the driver, and ship with
+  * the factory. Deriving them per reader ran Scala reflection in every task
+  * against the session's executor classloader; once a task on that loader
+  * was killed (a sibling task's failure, a stopped query), later readers of
+  * the long-lived session failed to resolve `scala.Nothing` through it.
   */
 class ChangelogReaderFactory(c: GenConfig, transport: ShardEventTransport,
     wirePayload: Boolean = false,
     wireTable: Option[graft.core.WireTable] = None,
     faultFile: Option[String] = None)
     extends PartitionReaderFactory {
+  private val wireEnc =
+    if (wireTable.isEmpty && wirePayload) Some(ExpressionEncoder[WireChangeEvent]()) else None
+  private val typedEnc =
+    if (wireTable.isEmpty && !wirePayload) Some(ExpressionEncoder[ChangeEvent]()) else None
+
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     // injected transient fault (max_retries testing): exactly ONE reader —
     // whoever wins the atomic delete — throws, like a dropped VStream; the
@@ -380,10 +391,10 @@ class ChangelogReaderFactory(c: GenConfig, transport: ShardEventTransport,
       private val encode: ChangeEvent => InternalRow = wireTable match {
         case Some(wt) => ChangelogReaderFactory.genericWireEncoder(wt, p.c)
         case None if wirePayload =>
-          val ser = ExpressionEncoder[WireChangeEvent]().createSerializer()
+          val ser = wireEnc.get.createSerializer()
           e => ser(WireGen.fromEvent(e))
         case None =>
-          val ser = ExpressionEncoder[ChangeEvent]().createSerializer()
+          val ser = typedEnc.get.createSerializer()
           e => ser(e)
       }
       private val it = transport.events(p.shardIdx, p.from, p.to)

@@ -48,6 +48,73 @@ class CdcStreamSpec extends AnyFunSuite with SparkSupport {
     }
   }
 
+  test("back-to-back syncs reuse compiled code: a warm sync of the same shape " +
+    "runs no Janino compile") {
+    val c = GenConfig(numEvents = 6000L, numShards = 2, numRepos = 20, pathsPerRepo = 10)
+    val base = tmpDir("codegen")
+    val t = new LakeTable(s"$base/t", spark)
+    t.create(ChangeEvent.rowSchema, numBuckets = 4)
+    val rc = CdcStream.RunConfig(c, s"$base/t", s"$base/cp")
+    val compiles = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    // three syncs of 1,000 events per shard each: the first writes into an
+    // empty table, the second and third also rewrite survivors
+    CdcStream.runAvailableNow(spark, rc.copy(endSeq = Some(1000L)))
+    CdcStream.runAvailableNow(spark, rc.copy(endSeq = Some(2000L)))
+    val before = compiles.getCount
+    assert(CdcStream.runAvailableNow(spark, rc) == 1L)
+    val recompiled = compiles.getCount - before
+    assert(recompiled == 0L, s"third sync compiled $recompiled classes")
+    assertParity(t, ChangelogGen.expectedFinalState(spark, c))
+  }
+
+  test("metrics sidecar crash mid-write: a truncated file at the temp name is " +
+    "invisible to readMetrics/backfillMetrics and swept by compactMetrics") {
+    val c = GenConfig(numEvents = 4000L, numShards = 2, numRepos = 20, pathsPerRepo = 10)
+    val base = tmpDir("metricstmp")
+    val t = new LakeTable(s"$base/t", spark)
+    t.create(ChangeEvent.rowSchema, numBuckets = 4)
+    CdcStream.runAvailableNow(spark, CdcStream.RunConfig(c, s"$base/t", s"$base/cp",
+      maxEventsPerTrigger = Some(2000L)))
+    val m0 = CdcStream.readMetrics(spark, s"$base/t").orderBy("batch_id", "shard")
+      .collect().toSeq
+    val lastBatch = m0.map(_.getLong(0)).max
+    val dir = new org.apache.hadoop.fs.Path(s"$base/t/metrics")
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // crash window: the snapshot committed, the last batch's sidecar file
+    // was being written when the process died
+    fs.listStatus(dir).map(_.getPath).filter(_.getName.startsWith("part-")).foreach { f =>
+      if (spark.read.parquet(f.toString).filter(col("batch_id") === lastBatch)
+          .limit(1).count() > 0) fs.delete(f, false)
+    }
+    val tmp = new org.apache.hadoop.fs.Path(dir, ".part-direct-crash.parquet.tmp")
+    val out = fs.create(tmp)
+    out.write("PAR1 truncated, no footer".getBytes("UTF-8"))
+    out.close()
+    assert(CdcStream.readMetrics(spark, s"$base/t")
+      .filter(col("batch_id") === lastBatch).count() == 0)
+    CdcStream.backfillMetrics(spark, s"$base/t", t, lastBatch)
+    val healed = CdcStream.readMetrics(spark, s"$base/t").orderBy("batch_id", "shard")
+      .collect().toSeq
+    assert(healed.map(r => (r.getLong(0), r.getString(2), r.getLong(5))) ==
+      m0.map(r => (r.getLong(0), r.getString(2), r.getLong(5))))
+    assert(fs.exists(tmp))
+    CdcStream.compactMetrics(spark, s"$base/t")
+    assert(!fs.exists(tmp), "stranded temp file survived compactMetrics")
+    assert(CdcStream.readMetrics(spark, s"$base/t").count() == m0.size)
+  }
+
+  test("metrics sidecar: null keyspace / vgtid strings land as null columns") {
+    val base = tmpDir("metricsnull")
+    val st = graft.core.ShardStats(graft.core.ShardCursor(null, "-80", "", None), 5L,
+      null, null)
+    CdcStream.writeMetrics(spark, base, 7L, Map("-80" -> st), 10L, 1L)
+    val r = CdcStream.readMetrics(spark, base).head()
+    assert(r.getAs[Long]("batch_id") == 7L && r.getAs[String]("shard") == "-80" &&
+      r.getAs[Long]("rows") == 5L)
+    assert(r.isNullAt(r.fieldIndex("keyspace")) && r.isNullAt(r.fieldIndex("vgtid_start")) &&
+      r.isNullAt(r.fieldIndex("vgtid_end")))
+  }
+
   test("kill mid-stream and resume from checkpoint: no loss, no duplicates") {
     val c = GenConfig(numEvents = 8000L, numShards = 2, numRepos = 30, pathsPerRepo = 20)
     val base = tmpDir("resume")
@@ -591,6 +658,29 @@ class CdcStreamSpec extends AnyFunSuite with SparkSupport {
     // rdonly wins over replica (reference precedence)
     val both = CdcStream.sourceOptions(rc.copy(useRdonly = true))
     assert(ChangelogSource.parseOptions(both).tabletType == "rdonly")
+  }
+
+  test("source readers derive no encoder in the task: a reader on a thread " +
+    "whose context classloader cannot see Scala still encodes events") {
+    val c = GenConfig(numEvents = 200L, numShards = 2, numRepos = 5, pathsPerRepo = 4)
+    val transport = new SyntheticTransport(c)
+    Seq(false, true).foreach { wire =>
+      // built on the driver, as the scan builds it
+      val factory = new ChangelogReaderFactory(c, transport, wirePayload = wire)
+      var rows = 0
+      var failure: Option[Throwable] = None
+      val task = new Thread(() =>
+        try {
+          val r = factory.createReader(ChangelogInputPartition(0, 0L, 50L, c))
+          while (r.next()) rows += 1
+        } catch { case t: Throwable => failure = Some(t) })
+      // an executor classloader whose Scala reflection mirror is unusable
+      task.setContextClassLoader(new java.net.URLClassLoader(Array.empty, null))
+      task.start()
+      task.join()
+      assert(failure.isEmpty, s"wirePayload=$wire reader failed: $failure")
+      assert(rows == 50)
+    }
   }
 
   test("batch scan of the source equals the batch generator (same offsets)") {
